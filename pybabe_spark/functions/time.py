@@ -3,8 +3,9 @@
 Reference: pybabe/timeparse.py (multi-format lenient parse with
 ``/-,`` → space normalization, tz via pytz) and pybabe/types.py:8-49
 (``typedetect`` regex inference). Spark-first: a ``coalesce`` ladder of
-``try_to_timestamp`` formats — all JVM-side, no Python — and a
-sampling-free two-pass type detector built on ``try_cast`` counts.
+``try_to_timestamp`` formats — all JVM-side, no Python — and a two-pass
+type detector built on ``try_cast`` failure counts over a bounded
+sample.
 """
 
 from __future__ import annotations
@@ -141,6 +142,34 @@ def parse_time(
 #: whose timestamp interpretation is all-midnight is demoted to date.
 _DETECT_ORDER = ["bigint", "double", "timestamp", "date"]
 
+#: Shape guard for pass 1's bigint cast. Under ANSI mode a
+#: try_cast(string as bigint) that rejects its value throws and catches
+#: a JVM exception — per value, and on decimal/flag/date columns that is
+#: every sampled cell, the dominant cost of detection. The cast first
+#: strips whitespace/ISO-control characters (<= U+0020, U+007F-U+009F),
+#: then accepts an optional sign and ASCII digits, so values that do not
+#: match this regex skip the cast and count as rejected directly. It must
+#: stay a SUPERSET of what Spark's TRY-mode string→bigint cast accepts,
+#: or detected types change (parity test in tests/test_infra.py). Pass 2
+#: casts without it: its bigint columns were validated on the sample, so
+#: rejections there are rare and the regex would be pure per-cell cost.
+_BIGINT_SHAPE = r"^[\x00-\x20\x7F-\x9F0-9+\-]+$"
+
+
+def _try_cast_trimmed(c: str, t: str) -> Column:
+    """``try_cast(trim(c) as t)``: the cast typedetect applies."""
+    return F.trim(F.col(f"`{c}`")).try_cast(t)
+
+
+def _detect_cast(c: str, t: str) -> Column:
+    """Pass 1's cast: :func:`_try_cast_trimmed`, with the bigint shape
+    guard in front of the bigint cast (same result, NULL on rejection)."""
+    if t == "bigint":
+        return F.when(
+            F.col(f"`{c}`").rlike(_BIGINT_SHAPE), _try_cast_trimmed(c, t)
+        )
+    return _try_cast_trimmed(c, t)
+
 
 def typedetect(
     df: DataFrame,
@@ -149,11 +178,13 @@ def typedetect(
 ) -> DataFrame:
     """Infer and apply types for string columns (pybabe/types.py:8-49).
 
-    Pass 1 (one aggregation over a bounded sample): for each candidate
-    column and type, count non-null values where try_cast fails. Pass 2:
-    cast columns whose failure count is zero to the first matching type.
-    Two Spark jobs total, independent of column count; nothing collects
-    but one aggregate row.
+    Pass 1 (one aggregation over the first ``sample_rows`` rows): for
+    each candidate column and type, count non-null values where try_cast
+    fails. Pass 2 (lazy, no job): cast columns whose failure count is
+    zero to the first matching type. Pass 1 is one collect that AQE runs
+    as 4 Spark jobs, one per stage (sample scan, global limit, partial
+    aggregate over the 32 partitions, final aggregate), independent of
+    column count; nothing collects but one aggregate row.
     """
     string_cols = [c for c, t in df.dtypes if t == "string"]
     targets = [c for c in (fields or string_cols) if c in string_cols]
@@ -169,25 +200,18 @@ def typedetect(
             aggs.append(
                 F.count(
                     F.when(
-                        F.col(c).isNotNull()
-                        & F.expr(f"try_cast(trim(`{c}`) as {t})").isNull(),
+                        F.col(c).isNotNull() & _detect_cast(c, t).isNull(),
                         1,
                     )
                 ).alias(f"{c}||{t}"),
             )
         aggs.append(F.count(F.col(c)).alias(f"{c}||nonnull"))
         # any value with a real time-of-day component? (timestamp vs date)
+        ts = _try_cast_trimmed(c, "timestamp")
         aggs.append(
-            F.count(
-                F.when(
-                    F.expr(
-                        f"try_cast(trim(`{c}`) as timestamp) is not null and "
-                        f"try_cast(trim(`{c}`) as timestamp) != "
-                        f"date_trunc('DAY', try_cast(trim(`{c}`) as timestamp))"
-                    ),
-                    1,
-                )
-            ).alias(f"{c}||hastime"),
+            F.count(F.when(ts != F.date_trunc("DAY", ts), 1)).alias(
+                f"{c}||hastime"
+            ),
         )
     stats = sample.agg(*aggs).collect()[0].asDict()
 
@@ -214,7 +238,7 @@ def typedetect(
         # so an unsampled unparseable value must become NULL (matching
         # the detection semantics) instead of failing the whole job
         # under ANSI mode
-        out = out.withColumn(c, F.expr(f"try_cast(trim(`{c}`) as {t})"))
+        out = out.withColumn(c, _try_cast_trimmed(c, t))
     return out
 
 

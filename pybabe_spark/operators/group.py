@@ -210,26 +210,35 @@ def funnel(
     # caches the source lineage re-derives per consumer (measured 7×
     # on 3 steps)
     events = events.select(user_col, type_col, ts_col).persist()
+    cached = [events]
     frontier = None
     prev_t = None
     counts = []
-    for i, s in enumerate(steps):
-        f = events.filter(F.col(type_col) == s)
-        if frontier is not None:
-            cond = F.col(ts_col) > F.col(prev_t)
-            if within is not None:
-                cond = cond & (
-                    F.col(ts_col)
-                    <= F.col(prev_t) + F.expr(f"INTERVAL {int(within)} SECOND")
-                )
-            f = f.join(frontier, user_col).filter(cond)
-        prev_t = f"__t{i}"
-        frontier = f.groupBy(user_col).agg(
-            F.min(ts_col).alias(prev_t)
-        ).persist()
-        # bounded action: a 1-row count of the persisted frontier (the
-        # fill is work the next step's join needed anyway)
-        counts.append(frontier.count())
+    try:
+        for i, s in enumerate(steps):
+            f = events.filter(F.col(type_col) == s)
+            if frontier is not None:
+                cond = F.col(ts_col) > F.col(prev_t)
+                if within is not None:
+                    cond = cond & (
+                        F.col(ts_col)
+                        <= F.col(prev_t)
+                        + F.expr(f"INTERVAL {int(within)} SECOND")
+                    )
+                f = f.join(frontier, user_col).filter(cond)
+            prev_t = f"__t{i}"
+            frontier = f.groupBy(user_col).agg(
+                F.min(ts_col).alias(prev_t)
+            ).persist()
+            cached.append(frontier)
+            # bounded action: a 1-row count of the persisted frontier
+            # (the fill is work the next step's join needed anyway)
+            counts.append(frontier.count())
+    finally:
+        # the result is a VALUES literal of the counts, so no cache
+        # outlives this call
+        for c in cached:
+            c.unpersist()
     u0 = counts[0]
     rows = [
         (

@@ -8271,8 +8271,8 @@ def jarque_bera_sql(
 
 #: bounded-collect caps for the jonckheere driver-side finish: the
 #: (group, value) grain collects when it fits these (limit-proved
-#: action); a bigger grain keeps the in-plan path, whose cache the
-#: probe collect already filled
+#: action); a bigger grain keeps the in-plan path, reusing whatever
+#: partitions of its cache the probe collect computed
 _JT_MAX_CELLS = 16384
 _JT_MAX_GROUPS = 256
 
@@ -8428,7 +8428,9 @@ def jonckheere_terpstra(
     # join + five side aggregates) with exact driver arithmetic and a
     # VALUES-literal 1-row result. A bigger grain — or a pathological
     # one (NULL group/value from a failed cast) — keeps the in-plan
-    # path below, whose cache the probe collect has already filled.
+    # path below. limit().collect() may compute only some of the
+    # cache's partitions (it stops once it has enough rows), so the
+    # in-plan path fills the rest on its first action.
     probe = cnts.limit(_JT_MAX_CELLS + 1).collect()
     if len(probe) <= _JT_MAX_CELLS and all(
         r["__g"] is not None and r["__v"] is not None for r in probe

@@ -65,20 +65,52 @@ def test_primary_key_detect(spark, sf_dir):
     assert primary_key_detect(no_pk) is None
 
 
-@pytest.mark.deep
 def test_typedetect_mixed(spark):
     df = spark.createDataFrame(
-        [("1", "1.5", "2020-01-02", "abc"), ("2", "2,25", "2021-03-04", "def")],
-        "i string, f string, d string, s string",
+        [("1", "1.5", "2020-01-02", "abc", "1", "N"),
+         ("2", "2,25", "2021-03-04", "def", "2.5", "O")],
+        "i string, f string, d string, s string, n string, flag string",
     )
     out = typedetect(df)
     dt = dict(out.dtypes)
     assert dt["i"] == "bigint"
     assert dt["d"] == "date"
     assert dt["s"] == "string"
+    # values the bigint cast rejects: an int/decimal mix and flags
+    assert dt["n"] == "double"
+    assert dt["flag"] == "string"
+    rows = sorted(out.select("i", "n", "flag").collect())
+    assert [tuple(r) for r in rows] == [(1, 1.0, "N"), (2, 2.5, "O")]
 
 
-@pytest.mark.deep
+def test_typedetect_bigint_guard_matches_bare_cast(spark):
+    """The bigint shape guard must never reject a value the bare
+    try_cast(trim(x) as bigint) accepts, nor change a cast value."""
+    from pybabe_spark.functions.time import _detect_cast
+
+    around = [chr(i) for i in range(0x250)]
+    around += ["\u0660", "\uff10", "\u3000", "\u2007", "\ufeff"]
+    corpus = set()
+    for ch in around:
+        corpus.update([ch, ch + "1", "1" + ch, ch + "1" + ch, "1" + ch + "2"])
+    corpus.update([
+        "+1", "-1", " +7 ", "+-1", "--1", "+", "-", "1+", "1-", "1.0",
+        "1e3", "0x1F", "1_0", "9223372036854775807",
+        "9223372036854775808", "-9223372036854775808",
+        "-9223372036854775809", "+9223372036854775807",
+    ])
+    df = spark.createDataFrame([(v,) for v in sorted(corpus)], "x string")
+    got = df.select(
+        _detect_cast("x", "bigint").alias("g"),
+        F.expr("try_cast(trim(x) as bigint)").alias("b"),
+    ).agg(
+        F.count("b").alias("accepted"),
+        F.count(F.when(~F.col("g").eqNullSafe(F.col("b")), 1)).alias("diff"),
+    ).collect()[0]
+    assert got["accepted"] > 0
+    assert got["diff"] == 0
+
+
 def test_typedetect_datetime_keeps_time_of_day(spark):
     """ISO datetimes must detect as timestamp, not date (Spark's
     string->date cast truncates '2020-01-02 10:30:00' silently; the

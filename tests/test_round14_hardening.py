@@ -96,6 +96,22 @@ def test_funnel_empty_first_step(spark):
     assert rows[1]["users"] == 0 and rows[1]["conversion"] is None
 
 
+def test_funnel_releases_its_caches(spark):
+    """The eager finish leaves no cached blocks behind: the event
+    projection and every frontier are unpersisted once counted."""
+    from pybabe_spark.operators.group import funnel
+
+    ev = spark.createDataFrame(
+        [(1, "view", 1), (1, "click", 2), (2, "view", 3)],
+        "user_id int, event_type string, ts int",
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    rows = funnel(ev, ["view", "click"]).collect()
+    assert [r["users"] for r in rows] == [2, 1]
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_rank_fuse_nan_score_falls_back_in_plan(spark):
     """r14 driver-side fusion: a NaN score makes Python sort order
     untrustworthy, so the operator must fall back to the in-plan
